@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.spark_exprs import haversine_col
+from .partitioning import spread_partitions
 
 #: Seeding histograms are collected at min(res, SEED_RES_CAP): the driver
 #: never holds more than 4^SEED_RES_CAP histogram rows (65k) no matter how
@@ -88,11 +89,7 @@ def knn_join(
 
     Ties broken by candidate id (deterministic, matches the oracle).
     """
-    spark = candidates.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    cand = candidates.select(cand_id, cand_lon, cand_lat)
-    if cand.rdd.getNumPartitions() < max(2, par // 2):
-        cand = cand.repartition(par)  # small-scan artifact; see spatial_join
+    cand = spread_partitions(candidates.select(cand_id, cand_lon, cand_lat))
     q = queries.select(query_id, query_lon, query_lat)
     joined = cand.crossJoin(F.broadcast(q))
     joined = joined.withColumn(
@@ -252,10 +249,7 @@ def knn_join_cells(
 
     spark = candidates.sparkSession
     n = 1 << res
-    par = spark.sparkContext.defaultParallelism
-    cand = candidates.select(cand_id, cand_lon, cand_lat)
-    if cand.rdd.getNumPartitions() < max(2, par // 2):
-        cand = cand.repartition(par)
+    cand = spread_partitions(candidates.select(cand_id, cand_lon, cand_lat))
     cand = cand.withColumn("__cell", cell_col(F.col(cand_lon), F.col(cand_lat), res)).persist()
 
     # ---- density seeding: ONE histogram collect at the COARSE resolution

@@ -39,6 +39,19 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def spread_partitions(df: DataFrame) -> DataFrame:
+    """Partition-spread guard for CPU-bound map work: a small parquet file
+    (one row group) scans as ONE split, which would serialize everything
+    downstream of the scan.  Repartition to the default parallelism when the
+    source has fewer than half of it; at 100 TB the scan has thousands of
+    splits and this is a no-op.  Streaming sources own their partitioning
+    (``.rdd`` is illegal there) and pass through unchanged."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if not df.isStreaming and df.rdd.getNumPartitions() < max(2, par // 2):
+        return df.repartition(par)
+    return df
+
+
 def str_partition(
     df: DataFrame,
     x_col: str,

@@ -1,52 +1,88 @@
-"""Point-in-polygon spatial join: cell-key equi-join prefilter + exact PIP refine.
+"""Spatial joins as one two-phase core: cell-key candidates, exact refine.
 
 The reference has spatial *filters* only (F/filter/BinarySpatialFilter.java) —
 a spatial join must be phrased as a per-row filter (nested loop,
-S/aggregate/JoinFeatureSet.java:485-512).  This operator is the Spark-native
-replacement: a **two-phase** join per the north rule:
+S/aggregate/JoinFeatureSet.java:485-512).  Every join here is instead:
 
-Phase 1 (prefilter, plan-time + map-side):
-    * driver computes each polygon's covering cells at a resolution chosen
-      from the polygon size distribution (the GridDerivation-style pruning of
-      F/coverage/grid/GridDerivation.java:332 done as plan construction);
-    * points get their cell id via a JVM codegen expression (no Python);
-    * candidates = points ⋈ broadcast(poly_cells) on cell — a broadcast hash
-      join, so the skewed hot cells never shuffle.
+Phase 1 (candidates): each polygon part is covered by grid cells at a
+resolution picked from the median part width (``_res_for_width``; the
+GridDerivation-style pruning of F/coverage/grid/GridDerivation.java:332 done
+as plan construction), and a covering cell is marked ``sure`` when it is
+provably interior to its part (``_interior_cells``).  Features equi-join the
+covering on cell, then a codegen envelope prune (``_boxes_meet``) drops the
+candidates no refine could accept.
 
-Phase 2 (refine, Arrow-vectorized):
-    * mapInPandas ray-casting PIP (numpy even-odd kernel) against the
-      polygon vertex arrays shipped once per executor via a Spark broadcast —
-      the "broadcast STRtree" role of the north star; envelopes are checked
-      first (cheap numpy mask), then full PIP.
+Phase 2 (refine): an Arrow-vectorized numpy kernel on the surviving
+candidates only.
 
-For polygon sets too big to broadcast, ``strategy="shuffle"`` joins on cell
-with optional salting of hot cells (see salt_hot_cells) — the long-tail path
-of the two-phase broadcast-then-shuffle design.
+Point-in-polygon entry points share ``_point_join`` (partition-spread guard,
+JVM cell encode, sure/unsure split, envelope prune, refine, column cleanup);
+each supplies only its covering and its refine:
+
+* ``spatial_join`` — polygon list on the driver: covering built in driver
+  pandas (``polygon_cells``) and joined broadcast, or shuffled with hot
+  cells salted (``_cell_join``); the refine reads ring arrays packed once
+  and broadcast to executors (``_pack_polygons``).
+* ``spatial_join_dist`` — polygon DataFrame end to end: covering built on
+  executors in Arrow (``polygon_cells_df``, optionally compacted by
+  ``compact_cover``); the refine reads each candidate's own part WKB.
+
+Part-pair entry points (``polygon_pair_join``, ``polygon_pair_join_multi``,
+``line_polygon_join``, ``line_clip_join``, ``geometry_distance_join``) make
+key pairs from their coverings (``_self_pairs`` or ``_cover_pairs``) and share
+``_pair_candidates`` (WKB re-attach, envelope prune, spread) before their own
+Arrow refine.  ``nearest_line_join``, ``nearest_line_join_dist`` and
+``spacetime_join`` are distance joins of their own shape.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import cells as _cells
 from ..functions import geometry as _geo
 from ..functions.spark_exprs import cell_col
+from .partitioning import spread_partitions
+
+
+def _res_for_width(med: float) -> int:
+    """Cell resolution whose cell width is about ``med`` degrees: 1-4
+    covering cells per typical part, fine enough to prune the other side.
+    Widths below one res-14 cell all give 14 (a subnormal width would
+    overflow 360 / med)."""
+    med = max(float(med or 1.0), 360.0 / (1 << 14))
+    return max(1, min(int(math.floor(math.log2(360.0 / med))), 14))
 
 
 def choose_resolution(polygons: list[dict]) -> int:
-    """Cell res whose cell size ~ median polygon diameter (1-4 covering cells
-    per typical polygon, fine enough to prune the point side)."""
+    """Cell res whose cell size ~ median polygon diameter."""
     if not polygons:
         return 7
     widths = [max(p["xmax"] - p["xmin"], (p["ymax"] - p["ymin"]) * 2.0) for p in polygons]
-    med = float(np.median(widths)) or 1.0
-    res = int(math.floor(math.log2(360.0 / med)))
-    return max(1, min(res, 14))
+    return _res_for_width(np.median(widths))
+
+
+def _interior_cells(cells: np.ndarray, rings: list, res: int) -> np.ndarray:
+    """``sure`` flag per covering cell: True when the cell is PROVABLY
+    interior to the part — all 4 cell corners inside (even-odd over all
+    rings) and no ring edge meeting the closed cell rectangle (Liang–Barsky;
+    a hole fully inside the cell shows up as edges inside the rect, so holes
+    are handled).  Points in a sure cell are matches by construction."""
+    x0, y0, x1, y1 = _cells.cell_to_envelope(cells, res)
+    sure = np.ones(len(cells), dtype=bool)
+    for cx, cy in ((x0, y0), (x1, y0), (x0, y1), (x1, y1)):
+        sure &= _geo.points_in_polygon_with_holes(cx, cy, rings)
+    for vx, vy in rings:
+        wx, wy = np.roll(vx, -1), np.roll(vy, -1)
+        sure &= ~_geo.segments_intersect_rects(vx, vy, wx, wy, x0, y0, x1, y1)
+    return sure
 
 
 def polygon_cells(polygons: list[dict], res: int, classify: bool = False) -> pd.DataFrame:
@@ -58,60 +94,26 @@ def polygon_cells(polygons: list[dict], res: int, classify: bool = False) -> pd.
     exact envelope test — pruning them in codegen keeps those rows from ever
     crossing the Python boundary.
 
-    ``classify=True`` additionally marks each covering cell ``sure`` when it
-    is PROVABLY interior to the polygon: all 4 cell corners inside (even-odd
-    over all rings) and no ring edge intersecting the cell rectangle
-    (Liang–Barsky; a hole fully inside the cell shows up as edges inside the
-    rect, so holes are handled).  Points in a sure cell are matches by
-    construction and skip the PIP refine entirely — at the engine's skewed
-    workloads ~70% of candidate pairs fall in sure cells at res+3."""
-    cell_list = []
-    idx_list = []
-    envs = []
-    sures = []
-    n = 1 << res
-    cw, ch = 360.0 / n, 180.0 / n
-    for i, p in enumerate(polygons):
-        cov = _cells.covering_cells(p["xmin"], p["ymin"], p["xmax"], p["ymax"], res)
-        cell_list.append(cov)
-        idx_list.append(np.full(cov.shape, i, dtype=np.int64))
-        envs.append(
-            np.broadcast_to(
-                np.array([[p["xmin"], p["ymin"], p["xmax"], p["ymax"]]]), (len(cov), 4)
-            )
-        )
-        if classify:
-            ix, iy = _cells.cell_to_ixiy(cov, res)
-            x0 = ix.astype(np.float64) * cw - 180.0
-            y0 = iy.astype(np.float64) * ch - 90.0
-            x1, y1 = x0 + cw, y0 + ch
-            corners_in = np.ones(len(cov), dtype=bool)
-            for cx, cy in ((x0, y0), (x1, y0), (x0, y1), (x1, y1)):
-                acc = np.zeros(len(cov), dtype=np.int64)
-                for vx, vy in p["rings"]:
-                    acc += _geo.points_in_polygon(cx, cy, vx, vy).astype(np.int64)
-                corners_in &= (acc % 2).astype(bool)
-            hit = np.zeros(len(cov), dtype=bool)
-            for vx, vy in p["rings"]:
-                wx, wy = np.roll(vx, -1), np.roll(vy, -1)
-                hit |= _geo.segments_intersect_rects(vx, vy, wx, wy, x0, y0, x1, y1)
-            sures.append(corners_in & ~hit)
-    cols = ["cell", "poly_idx", "e_xmin", "e_ymin", "e_xmax", "e_ymax"] + (
-        ["sure"] if classify else []
-    )
-    if not cell_list:
-        return pd.DataFrame({c: [] for c in cols})
-    env = np.concatenate(envs)
+    ``classify=True`` adds ``sure`` (``_interior_cells``): points in a sure
+    cell skip the PIP refine entirely — at the engine's skewed workloads
+    ~70% of candidate pairs fall in sure cells at res+3."""
+    covs = [
+        _cells.covering_cells(p["xmin"], p["ymin"], p["xmax"], p["ymax"], res) for p in polygons
+    ]
+    idx = np.repeat(np.arange(len(polygons), dtype=np.int64), [len(c) for c in covs])
+    env = np.array([[p["xmin"], p["ymin"], p["xmax"], p["ymax"]] for p in polygons]).reshape(-1, 4)[idx]
     out = {
-        "cell": np.concatenate(cell_list),
-        "poly_idx": np.concatenate(idx_list),
+        "cell": np.concatenate(covs) if covs else np.zeros(0, dtype=np.int64),
+        "poly_idx": idx,
         "e_xmin": env[:, 0],
         "e_ymin": env[:, 1],
         "e_xmax": env[:, 2],
         "e_ymax": env[:, 3],
     }
     if classify:
-        out["sure"] = np.concatenate(sures)
+        out["sure"] = np.concatenate(
+            [_interior_cells(c, p["rings"], res) for c, p in zip(covs, polygons)]
+        ) if covs else np.zeros(0, dtype=bool)
     return pd.DataFrame(out)
 
 
@@ -182,6 +184,85 @@ def _pack_polygons(parts: list[dict]):
     return {"RVX": RVX, "RVY": RVY, "ring_start": ring_start, "env": env, "keys": keys}
 
 
+# covering-side and scratch columns the point join drops from its output
+_ENV = ("e_xmin", "e_ymin", "e_xmax", "e_ymax")
+_JOIN_COLS = ("cell", "__cell", "__jcell", "cres", *_ENV, "sure", "pwkb")
+
+
+def _boxes_meet(a, b, pad: float = 0.0) -> Column:
+    """Codegen test that closed boxes ``a`` and ``b`` — (xmin, ymin, xmax,
+    ymax) Columns — intersect once ``a`` is widened by ``pad`` on every side.
+    A point is the box (x, y, x, y).  This is the envelope prune every join
+    runs before its Arrow refine, so rows the refine could never accept
+    don't pay the Arrow transfer."""
+    if pad:
+        a = (a[0] - pad, a[1] - pad, a[2] + pad, a[3] + pad)
+    return (b[2] >= a[0]) & (b[0] <= a[2]) & (b[3] >= a[1]) & (b[1] <= a[3])
+
+
+def _point_join(points: DataFrame, lon_col: str, lat_col: str, res: int, join,
+                refine: Column, interior_skip: bool) -> DataFrame:
+    """The point-join core: ``join(pts)`` equi-joins the points, cell-encoded
+    at ``res`` as ``__cell``, with a covering table carrying the part
+    envelope (``e_*``) and, under ``interior_skip``, ``sure``.  Candidates in
+    sure cells ARE matches (no envelope test, no PIP); the rest pass the
+    codegen envelope prune, then ``refine`` (a boolean Arrow UDF column).
+    Two pipelines over the same map-side join — the join is cheap next to
+    the Arrow refine it avoids."""
+    pts = spread_partitions(points).withColumn(
+        "__cell", cell_col(F.col(lon_col), F.col(lat_col), res)
+    )
+    cand = join(pts)
+    point = (F.col(lon_col), F.col(lat_col), F.col(lon_col), F.col(lat_col))
+    unsure = cand.filter(~F.col("sure")) if interior_skip else cand
+    refined = unsure.filter(_boxes_meet(tuple(map(F.col, _ENV)), point)).filter(refine)
+    refined = refined.drop(*_JOIN_COLS)
+    if interior_skip:
+        refined = cand.filter(F.col("sure")).drop(*_JOIN_COLS).unionByName(refined)
+    return refined
+
+
+def _cell_join(pts: DataFrame, pc: pd.DataFrame, lon_col: str, lat_col: str, res: int,
+               strategy: str, salt: int | str | None) -> DataFrame:
+    """Cell equi-join of cell-encoded points with the driver covering ``pc``.
+
+    ``strategy="broadcast"``: one broadcast hash join, so the skewed hot
+    cells never shuffle.  Otherwise a shuffle join where HOT covering cells
+    are salted: a point picks salt pmod(hash(lon, lat), n) and each hot
+    covering row is repeated once per salt, so one hot cell's points spread
+    over n shuffle partitions; the other cells join plain.  ``salt=None``
+    salts no cell; ``salt=N`` salts every cell with n = N; ``salt="auto"``
+    measures instead of guessing — a sampled cell histogram gives the hot
+    set, and n is sized so a hot cell puts ~TARGET_ROWS_PER_SALT rows in
+    each shuffle partition."""
+    spark = pts.sparkSession
+    hot, n = np.zeros(len(pc), dtype=bool), 1
+    if strategy != "broadcast" and salt == "auto":
+        counts = hot_cells_with_counts(pts, lon_col, lat_col, res)
+        hot = pc["cell"].isin(list(counts)).to_numpy()
+        n = int(min(64, max(2, max(counts.values(), default=0) // TARGET_ROWS_PER_SALT + 1)))
+    elif strategy != "broadcast" and salt:
+        hot, n = np.ones(len(pc), dtype=bool), int(salt)
+    parts = []
+    # the hot/cold split is made on the DIMENSION side only (tiny, driver
+    # pandas): an isin over the cell expression on the point side blows
+    # whole-stage codegen past the 64 KB method limit
+    if not hot.all():
+        cold = spark.createDataFrame(pc[~hot])
+        dim = F.broadcast(cold) if strategy == "broadcast" else cold
+        parts.append(pts.join(dim, pts["__cell"] == cold["cell"], "inner"))
+    if hot.any():
+        salted = pts.withColumn(
+            "__salt", F.pmod(F.hash(F.col(lon_col), F.col(lat_col)), F.lit(n))
+        )
+        dim = spark.createDataFrame(pc[hot]).withColumn(
+            "__salt", F.explode(F.sequence(F.lit(0), F.lit(n - 1)))
+        )
+        on = (salted["__cell"] == dim["cell"]) & (salted["__salt"] == dim["__salt"])
+        parts.append(salted.join(dim, on, "inner").drop("__salt"))
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
 def spatial_join(
     points: DataFrame,
     polygons: list[dict],
@@ -197,6 +278,8 @@ def spatial_join(
 
     ``polygons``: list of dicts with key/vx/vy/xmin..ymax (synth.polygon_table_np
     shape, or built from WKB via sources.polygons_from_wkb).
+
+    ``strategy``/``salt``: how the covering joins the points (``_cell_join``).
 
     ``interior_skip``: run the prefilter 3 resolutions finer and classify
     covering cells at plan time; candidates in provably-interior cells are
@@ -223,118 +306,25 @@ def spatial_join(
         interior_skip = False
         pc = polygon_cells(polygons, res)
     pc = pc.astype({"cell": "int64", "poly_idx": "int64"})
-    cand_df = spark.createDataFrame(pc)
-    # CPU-bound refine must not inherit a tiny-scan partitioning: a small
-    # parquet (1 rowgroup) scans as ONE split, which would serialize the
-    # whole map-side pipeline.  At 100 TB the scan has thousands of splits;
-    # here we restore parallelism explicitly when the source lacks it.
-    par = spark.sparkContext.defaultParallelism
-    if not points.isStreaming and points.rdd.getNumPartitions() < max(2, par // 2):
-        # (streaming sources own their partitioning; .rdd is illegal there)
-        points = points.repartition(par)
-    pts = points.withColumn("__cell", cell_col(F.col(lon_col), F.col(lat_col), res))
-
-    if strategy == "broadcast":
-        cand = pts.join(F.broadcast(cand_df), pts["__cell"] == cand_df["cell"], "inner")
-    else:  # shuffle path with optional hot-cell salting
-        if salt == "auto":
-            # measure, don't guess: sampled cell histogram -> hot cell set +
-            # salt factor sized so a hot cell's rows spread over ~target
-            # rows per shuffle partition (the cell-frequency sampling +
-            # salted-repartition design of the north rule).  Only HOT cells
-            # pay the dimension-side explosion; the long tail joins plain.
-            hot = hot_cells_with_counts(points, lon_col, lat_col, res)
-            if hot:
-                hot_set = {int(c) for c in hot}
-                max_est = max(hot.values())
-                salt_n = int(min(64, max(2, max_est // TARGET_ROWS_PER_SALT + 1)))
-                # split the DIMENSION side only (tiny, driver-side pandas) —
-                # each equi-join then routes points by itself; no isin over
-                # the big cell expression on the fact side (an isin there
-                # blows whole-stage codegen past the 64 KB method limit and
-                # drops the scan to interpreted mode)
-                pc_hot = pc[pc["cell"].isin(hot_set)]
-                pc_cold = pc[~pc["cell"].isin(hot_set)]
-                parts = []
-                if len(pc_cold):
-                    cold_df = spark.createDataFrame(pc_cold)
-                    parts.append(pts.join(cold_df, pts["__cell"] == cold_df["cell"], "inner"))
-                if len(pc_hot):
-                    pts_s = pts.withColumn(
-                        "__salt", F.pmod(F.hash(F.col(lon_col), F.col(lat_col)), F.lit(salt_n))
-                    )
-                    hot_exploded = pc_hot.loc[pc_hot.index.repeat(salt_n)].reset_index(drop=True)
-                    hot_exploded["__salt"] = np.tile(np.arange(salt_n), len(pc_hot))
-                    hot_df = spark.createDataFrame(
-                        hot_exploded.astype({"__salt": "int64"})
-                    )
-                    parts.append(
-                        pts_s.join(
-                            hot_df,
-                            (pts_s["__cell"] == hot_df["cell"]) & (pts_s["__salt"] == hot_df["__salt"]),
-                            "inner",
-                        ).drop("__salt")
-                    )
-                cand = parts[0]
-                for extra in parts[1:]:
-                    cand = cand.unionByName(extra)
-            else:
-                cand = pts.join(cand_df, pts["__cell"] == cand_df["cell"], "inner")
-        elif salt:
-            # salt the fact side; explode the dimension side over the salt
-            # range so hot cells spread across `salt` shuffle partitions
-            pts = pts.withColumn("__salt", F.pmod(F.hash(F.col(lon_col), F.col(lat_col)), F.lit(salt)))
-            salts = spark.range(salt).withColumnRenamed("id", "__salt")
-            cand_df = cand_df.crossJoin(salts)
-            cand = pts.join(
-                cand_df,
-                (pts["__cell"] == cand_df["cell"]) & (pts["__salt"] == cand_df["__salt"]),
-                "inner",
-            ).drop("__salt")
-        else:
-            cand = pts.join(cand_df, pts["__cell"] == cand_df["cell"], "inner")
-
-    # exact-envelope prune in codegen (plain column compares) so rows the
-    # PIP could never accept don't pay the Arrow transfer
-    env_ok = (
-        (F.col(lon_col) >= F.col("e_xmin")) & (F.col(lon_col) <= F.col("e_xmax"))
-        & (F.col(lat_col) >= F.col("e_ymin")) & (F.col(lat_col) <= F.col("e_ymax"))
-    )
-    drop_cols = ["cell", "__cell", "e_xmin", "e_ymin", "e_xmax", "e_ymax"] + (
-        ["sure"] if interior_skip else []
-    )
 
     # Refine as a SCALAR Arrow UDF used in a filter: only (lon, lat,
     # poly_idx) cross the Python boundary; every other column stays JVM-side
     # (ArrowEvalPython is a projection, not a row pipe).
-    import pandas as pd
-    from pyspark.sql import types as T
-
     @F.pandas_udf(T.BooleanType())
     def pip_ok(lon_s: pd.Series, lat_s: pd.Series, gi_s: pd.Series) -> pd.Series:
         p = bc.value
-        px = lon_s.to_numpy(dtype=np.float64)
-        py = lat_s.to_numpy(dtype=np.float64)
-        gi = gi_s.to_numpy(dtype=np.int64)
         # dense (N, K) crossing passes, one per ring ordinal (1 for hole-free)
-        keep = _geo.points_in_padded_rings(
-            px, py, gi, p["RVX"], p["RVY"], p["ring_start"]
-        )
-        return pd.Series(keep)
+        return pd.Series(_geo.points_in_padded_rings(
+            lon_s.to_numpy(dtype=np.float64), lat_s.to_numpy(dtype=np.float64),
+            gi_s.to_numpy(dtype=np.int64), p["RVX"], p["RVY"], p["ring_start"],
+        ))
 
-    if interior_skip:
-        # interior cells ARE matches (no envelope, no PIP); boundary cells
-        # go through the full refine.  Two pipelines over the same map-side
-        # join — the join is cheap next to the Arrow refine it avoids.
-        sure_rows = cand.filter(F.col("sure")).drop(*drop_cols)
-        unsure = cand.filter(~F.col("sure")).filter(env_ok)
-        refined = sure_rows.unionByName(
-            unsure.filter(pip_ok(F.col(lon_col), F.col(lat_col), F.col("poly_idx"))).drop(*drop_cols)
-        )
-    else:
-        cand = cand.filter(env_ok).drop(*drop_cols)
-        refined = cand.filter(pip_ok(F.col(lon_col), F.col(lat_col), F.col("poly_idx")))
-
+    refined = _point_join(
+        points, lon_col, lat_col, res,
+        lambda pts: _cell_join(pts, pc, lon_col, lat_col, res, strategy, salt),
+        pip_ok(F.col(lon_col), F.col(lat_col), F.col("poly_idx")),
+        interior_skip,
+    )
     keys_arr = packed["keys"]
     key_map = spark.createDataFrame(
         pd.DataFrame({"poly_idx": np.arange(len(keys_arr)), poly_key_col: keys_arr})
@@ -392,8 +382,7 @@ def _choose_res_dist(parts: DataFrame) -> int:
             F.lit(0.5),
         ).alias("med")
     ).first()
-    med = float(row["med"] or 1.0) or 1.0
-    return max(1, min(int(math.floor(math.log2(360.0 / med))), 14))
+    return _res_for_width(row["med"])
 
 
 def polygon_parts_df(polygons_df: DataFrame, key_col: str = "key", wkb_col: str = "wkb") -> DataFrame:
@@ -401,7 +390,6 @@ def polygon_parts_df(polygons_df: DataFrame, key_col: str = "key", wkb_col: str 
     (key, wkb, xmin, ymin, xmax, ymax): anti-meridian SPLIT, MultiPolygon
     member expansion, holes preserved — the distributed analog of
     normalize_polygons (BinaryGeometryFilter.optimize plan normalization)."""
-    from ..functions import geometry as geo
     from ..sources import polygons_from_wkb
 
     def norm(batches):
@@ -413,7 +401,7 @@ def polygon_parts_df(polygons_df: DataFrame, key_col: str = "key", wkb_col: str 
             )
             yield pd.DataFrame({
                 "key": np.array([p["key"] for p in parts], dtype=np.int64),
-                "wkb": [bytes(geo.wkb_polygon(p["rings"])) for p in parts],
+                "wkb": [bytes(_geo.wkb_polygon(p["rings"])) for p in parts],
                 "xmin": np.array([p["xmin"] for p in parts]),
                 "ymin": np.array([p["ymin"] for p in parts]),
                 "xmax": np.array([p["xmax"] for p in parts]),
@@ -432,9 +420,6 @@ def polygon_cells_df(parts: DataFrame, res: int, classify: bool = True) -> DataF
     geometry transfer).  Same classification as polygon_cells."""
     from ..sources import polygons_from_wkb
 
-    n = 1 << res
-    cw, ch = 360.0 / n, 180.0 / n
-
     def cover(batches):
         for pdf in batches:
             for key, wkb, xmin, ymin, xmax, ymax in zip(
@@ -442,26 +427,9 @@ def polygon_cells_df(parts: DataFrame, res: int, classify: bool = True) -> DataF
             ):
                 cov = _cells.covering_cells(xmin, ymin, xmax, ymax, res)
                 m = len(cov)
-                if m == 0:
-                    continue
                 if classify:
                     (part,) = polygons_from_wkb([(key, wkb)])
-                    rings = [(part["vx"], part["vy"])] + list(part["holes"])
-                    ix, iy = _cells.cell_to_ixiy(cov, res)
-                    x0 = ix.astype(np.float64) * cw - 180.0
-                    y0 = iy.astype(np.float64) * ch - 90.0
-                    x1, y1 = x0 + cw, y0 + ch
-                    corners_in = np.ones(m, dtype=bool)
-                    for cx, cy in ((x0, y0), (x1, y0), (x0, y1), (x1, y1)):
-                        acc = np.zeros(m, dtype=np.int64)
-                        for vx, vy in rings:
-                            acc += _geo.points_in_polygon(cx, cy, vx, vy).astype(np.int64)
-                        corners_in &= (acc % 2).astype(bool)
-                    hit = np.zeros(m, dtype=bool)
-                    for vx, vy in rings:
-                        wx, wy = np.roll(vx, -1), np.roll(vy, -1)
-                        hit |= _geo.segments_intersect_rects(vx, vy, wx, wy, x0, y0, x1, y1)
-                    sure = corners_in & ~hit
+                    sure = _interior_cells(cov, [(part["vx"], part["vy"])] + part["holes"], res)
                 else:
                     sure = np.zeros(m, dtype=bool)
                 yield pd.DataFrame({
@@ -583,7 +551,6 @@ def spatial_join_dist(
     """
     from ..sources import polygons_from_wkb
 
-    spark = points.sparkSession
     parts = polygon_parts_df(polygons_df, key_col, wkb_col).persist()
     if broadcast_threshold:
         n_parts = parts.limit(broadcast_threshold + 1).count()
@@ -599,16 +566,9 @@ def spatial_join_dist(
             res = min(res + 3, 14)
     cov = polygon_cells_df(parts, res, classify=interior_skip)
 
-    par = spark.sparkContext.defaultParallelism
-    if not points.isStreaming and points.rdd.getNumPartitions() < max(2, par // 2):
-        # (streaming sources own their partitioning; .rdd is illegal there)
-        points = points.repartition(par)
-    pts = points.withColumn("__cell", cell_col(F.col(lon_col), F.col(lat_col), res))
-
-    drop_cols = ["cell", "__cell", "e_xmin", "e_ymin", "e_xmax", "e_ymax", "sure", "pwkb"]
+    if compact_levels and not interior_skip:
+        raise ValueError("compact_levels requires interior_skip=True")
     if compact_levels == "auto":
-        if not interior_skip:
-            raise ValueError("compact_levels requires interior_skip=True")
         st = parts.agg(
             F.sum((F.col("xmax") - F.col("xmin")) * (F.col("ymax") - F.col("ymin"))).alias("area"),
             F.sum(2.0 * ((F.col("xmax") - F.col("xmin")) + (F.col("ymax") - F.col("ymin")))).alias("perim"),
@@ -620,33 +580,22 @@ def spatial_join_dist(
             6, res - 1, int(math.ceil(math.log(interior / boundary, 4.0)))
         ))
     if compact_levels:
-        if not interior_skip:
-            raise ValueError("compact_levels requires interior_skip=True")
         compact_levels = max(0, min(compact_levels, res - 1))
         cov = compact_cover(cov, res, compact_levels)
-        # ancestor chain: the point's cell at res, res-1, ..., res-levels —
-        # exactly one of them can hit each part's (disjoint) mixed-res cover
-        pts = pts.withColumn(
-            "__jcell",
-            F.explode(F.array(*[
-                F.shiftright("__cell", 2 * d) for d in range(compact_levels + 1)
-            ])),
-        )
-        cand = pts.join(cov, pts["__jcell"] == cov["cell"], "inner")
-        drop_cols += ["__jcell", "cres"]
-    else:
-        cand = pts.join(cov, pts["__cell"] == cov["cell"], "inner")
-    env_ok = (
-        (F.col(lon_col) >= F.col("e_xmin")) & (F.col(lon_col) <= F.col("e_xmax"))
-        & (F.col(lat_col) >= F.col("e_ymin")) & (F.col(lat_col) <= F.col("e_ymax"))
-    )
 
-    from pyspark.sql import types as T
+    def join(pts):
+        on = pts["__cell"]
+        if compact_levels:
+            # ancestor chain: the point's cell at res, res-1, ..., res-levels —
+            # exactly one of them can hit each part's (disjoint) mixed-res cover
+            pts = pts.withColumn("__jcell", F.explode(F.array(*[
+                F.shiftright("__cell", 2 * d) for d in range(compact_levels + 1)
+            ])))
+            on = pts["__jcell"]
+        return pts.join(cov, on == cov["cell"], "inner")
 
     @F.pandas_udf(T.BooleanType())
     def pip_ok_wkb(lon_s: pd.Series, lat_s: pd.Series, wkb_s: pd.Series) -> pd.Series:
-        from ..functions import geometry as geo
-
         px = lon_s.to_numpy(dtype=np.float64)
         py = lat_s.to_numpy(dtype=np.float64)
         out = np.zeros(len(px), dtype=bool)
@@ -655,37 +604,93 @@ def spatial_join_dist(
         for i, b in enumerate(wkb_s):
             grp.setdefault(bytes(b), []).append(i)
         for buf, idxs in grp.items():
-            _, rings = geo.wkb_parse(buf)
+            (part,) = polygons_from_wkb([(0, buf)])
             ii = np.asarray(idxs, dtype=np.int64)
-            acc = np.zeros(len(ii), dtype=np.int64)
-            for vx, vy in rings:
-                if len(vx) >= 2 and vx[0] == vx[-1] and vy[0] == vy[-1]:
-                    vx, vy = vx[:-1], vy[:-1]  # open the ring (implicit close)
-                acc += geo.points_in_polygon(px[ii], py[ii], vx, vy).astype(np.int64)
-            out[ii] = (acc % 2).astype(bool)
+            out[ii] = _geo.points_in_polygon_with_holes(
+                px[ii], py[ii], [(part["vx"], part["vy"])] + part["holes"]
+            )
         return pd.Series(out)
 
-    if interior_skip:
-        sure_rows = cand.filter(F.col("sure")).drop(*drop_cols)
-        unsure = cand.filter(~F.col("sure")).filter(env_ok)
-        refined = sure_rows.unionByName(
-            unsure.filter(pip_ok_wkb(F.col(lon_col), F.col(lat_col), F.col("pwkb"))).drop(*drop_cols)
-        )
-    else:
-        refined = cand.filter(env_ok).filter(
-            pip_ok_wkb(F.col(lon_col), F.col(lat_col), F.col("pwkb"))
-        ).drop(*drop_cols)
+    refined = _point_join(
+        points, lon_col, lat_col, res, join,
+        pip_ok_wkb(F.col(lon_col), F.col(lat_col), F.col("pwkb")), interior_skip,
+    )
     return refined.withColumnRenamed("pkey", poly_key_col)
 
 
-# ------------------------------------------------- polygon-vs-polygon pair join
+# ------------------------------------------------------------ part-pair joins
 #
 # Arbitrary-pair spatial predicates (BinarySpatialFilter.java:43 dispatching
-# to GeometryWrapper.predicate:287) need a polygon-polygon JOIN at engine
-# level.  Same covering-cell bucket shape as the point join: candidates are
-# key pairs sharing a covering cell (complete: two intersecting envelopes
-# share the cell containing any common point), envelope-pruned in codegen,
-# then refined by the DE-9IM kernel (functions/relate.py) over WKB pairs.
+# to GeometryWrapper.predicate:287) need a part-pair JOIN at engine level.
+# Same covering-cell bucket shape as the point join: candidates are key
+# pairs sharing a covering cell (complete: two intersecting envelopes share
+# the cell containing any common point), envelope-pruned in codegen, then
+# refined by an Arrow kernel over WKB pairs (functions/relate.py etc.).
+
+def _cover_keys(parts: DataFrame, res: int, pad: float = 0.0) -> DataFrame:
+    """(cell, key) covering of each part's envelope widened by ``pad``."""
+    if pad:
+        parts = parts.select(
+            "key", "wkb",
+            (F.col("xmin") - pad).alias("xmin"), (F.col("ymin") - pad).alias("ymin"),
+            (F.col("xmax") + pad).alias("xmax"), (F.col("ymax") + pad).alias("ymax"),
+        )
+    cov = polygon_cells_df(parts, res, classify=False)
+    return cov.select("cell", F.col("pkey").alias("key"))
+
+
+def _self_pairs(cov: DataFrame) -> DataFrame:
+    """Distinct key pairs (a, b), a < b, sharing a cell of one covering."""
+    return (
+        cov.groupBy("cell")
+        .agg(F.collect_set("key").alias("ids"))
+        .filter(F.size("ids") >= 2)
+        .select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(ids, (x, i) -> "
+                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
+                    "y -> struct(least(x, y) AS a, greatest(x, y) AS b))))"
+                )
+            ).alias("p")
+        )
+        .select("p.a", "p.b")
+        .distinct()
+    )
+
+
+def _cover_pairs(a_cov: DataFrame, b_cov: DataFrame) -> DataFrame:
+    """Distinct key pairs (a, b) sharing a cell of two coverings."""
+    return (
+        a_cov.withColumnRenamed("key", "a")
+        .join(b_cov.withColumnRenamed("key", "b"), "cell")
+        .select("a", "b")
+        .distinct()
+    )
+
+
+def _pair_candidates(pairs: DataFrame, a_parts: DataFrame, b_parts: DataFrame,
+                     pad: float = 0.0) -> DataFrame:
+    """The part-pair candidate tail: attach each side's part columns to the
+    (a, b) key pairs — ``key`` becomes ``a``/``b``, every other column gets
+    an ``_a``/``_b`` suffix (``wkb_a``, ``wkb_b``, ...) — keep the pairs
+    whose envelopes meet once side a is widened by ``pad`` (codegen, before
+    any Python), drop the envelopes, and spread the rows over the executor
+    cores: AQE coalesces the small candidate shuffle to ~1 partition, which
+    would serialize the refine, whose cost is per-ROW CPU, not bytes."""
+    def side(parts, s):
+        return parts.select(*[F.col(c).alias(s if c == "key" else f"{c}_{s}") for c in parts.columns])
+
+    def env(s):
+        return tuple(F.col(f"{c}_{s}") for c in ("xmin", "ymin", "xmax", "ymax"))
+
+    cand = (
+        pairs.join(side(a_parts, "a"), "a").join(side(b_parts, "b"), "b")
+        .filter(_boxes_meet(env("a"), env("b"), pad))
+        .drop(*env("a"), *env("b"))
+    )
+    return cand.repartition(cand.sparkSession.sparkContext.defaultParallelism)
+
 
 def polygon_pair_join(
     polygons_df: DataFrame,
@@ -705,43 +710,7 @@ def polygon_pair_join(
     parts = polygon_parts_df(polygons_df, key_col, wkb_col).persist()
     if res is None:
         res = _choose_res_dist(parts)
-    cov = polygon_cells_df(parts, res, classify=False).select("cell", "pkey")
-    pairs = (
-        cov.groupBy("cell")
-        .agg(F.collect_set("pkey").alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "y -> struct(least(x, y) AS a, greatest(x, y) AS b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.a", "p.b")
-        .distinct()
-    )
-    pa = parts.select(
-        F.col("key").alias("a"), F.col("wkb").alias("wkb_a"),
-        F.col("xmin").alias("axmin"), F.col("ymin").alias("aymin"),
-        F.col("xmax").alias("axmax"), F.col("ymax").alias("aymax"),
-    )
-    pb = parts.select(
-        F.col("key").alias("b"), F.col("wkb").alias("wkb_b"),
-        F.col("xmin").alias("bxmin"), F.col("ymin").alias("bymin"),
-        F.col("xmax").alias("bxmax"), F.col("ymax").alias("bymax"),
-    )
-    cand = (
-        pairs.join(pa, "a").join(pb, "b")
-        # exact envelope prune in codegen before any Python
-        .filter(
-            (F.col("axmin") <= F.col("bxmax")) & (F.col("bxmin") <= F.col("axmax"))
-            & (F.col("aymin") <= F.col("bymax")) & (F.col("bymin") <= F.col("aymax"))
-        )
-    )
-
-    from pyspark.sql import types as T
+    cand = _pair_candidates(_self_pairs(_cover_keys(parts, res)), parts, parts)
 
     @F.pandas_udf(
         T.StructType([
@@ -760,10 +729,6 @@ def polygon_pair_join(
             "contains_ba": p["within"],
         })
 
-    # AQE coalesces the small (tens of MB) candidate shuffle to ~1 partition,
-    # which would serialize the Python refine — its cost is per-ROW CPU, not
-    # bytes, so spread candidates across the executor cores explicitly.
-    cand = cand.repartition(cand.sparkSession.sparkContext.defaultParallelism)
     # asNondeterministic: stop Catalyst from re-evaluating the struct UDF
     # once per referenced field / pushed filter (measured 2-3x refine cost)
     out = cand.withColumn("r", rel.asNondeterministic()(F.col("wkb_a"), F.col("wkb_b")))
@@ -803,46 +768,13 @@ def polygon_pair_join_multi(
     )
     if res is None:
         res = _choose_res_dist(parts)
-    cov = polygon_cells_df(
-        parts.select(F.col("uid").alias("key"), "wkb", "xmin", "ymin", "xmax", "ymax"),
-        res, classify=False,
-    ).select("cell", F.col("pkey").alias("uid"))
-    pairs = (
-        cov.groupBy("cell")
-        .agg(F.collect_set("uid").alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "y -> struct(least(x, y) AS ua, greatest(x, y) AS ub))))"
-                )
-            ).alias("p")
-        )
-        .select("p.ua", "p.ub")
-        .distinct()
+    # candidate pairs of PART uids (a, b); each keeps its polygon key as pk
+    uparts = parts.select(
+        F.col("uid").alias("key"), F.col("key").alias("pk"), "wkb", "xmin", "ymin", "xmax", "ymax"
     )
-    pa = parts.select(
-        F.col("uid").alias("ua"), F.col("key").alias("ka"), F.col("wkb").alias("wkb_a"),
-        F.col("xmin").alias("axmin"), F.col("ymin").alias("aymin"),
-        F.col("xmax").alias("axmax"), F.col("ymax").alias("aymax"),
+    cand = _pair_candidates(_self_pairs(_cover_keys(uparts, res)), uparts, uparts).filter(
+        F.col("pk_a") != F.col("pk_b")
     )
-    pb = parts.select(
-        F.col("uid").alias("ub"), F.col("key").alias("kb"), F.col("wkb").alias("wkb_b"),
-        F.col("xmin").alias("bxmin"), F.col("ymin").alias("bymin"),
-        F.col("xmax").alias("bxmax"), F.col("ymax").alias("bymax"),
-    )
-    cand = (
-        pairs.join(pa, "ua").join(pb, "ub")
-        .filter(F.col("ka") != F.col("kb"))
-        .filter(
-            (F.col("axmin") <= F.col("bxmax")) & (F.col("bxmin") <= F.col("axmax"))
-            & (F.col("aymin") <= F.col("bymax")) & (F.col("bymin") <= F.col("aymax"))
-        )
-    )
-
-    from pyspark.sql import types as T
 
     @F.pandas_udf(
         T.StructType([
@@ -861,20 +793,17 @@ def polygon_pair_join_multi(
             "b_contains_a": p["within"],
         })
 
-    # canonical key orientation: a = lesser key; swap flags where ka > kb
-    # (repartition first: per-row-CPU refine must not run on an AQE-coalesced
-    # single partition)
-    cand = cand.repartition(cand.sparkSession.sparkContext.defaultParallelism)
+    # canonical key orientation: output a = lesser key; swap flags where
+    # pk_a > pk_b
+    in_order = F.col("pk_a") <= F.col("pk_b")
     flagged = cand.withColumn("r", rel.asNondeterministic()(F.col("wkb_a"), F.col("wkb_b"))).select(
-        F.least("ka", "kb").alias("a"),
-        F.greatest("ka", "kb").alias("b"),
-        F.when(F.col("ka") <= F.col("kb"), F.col("ua")).otherwise(F.col("ub")).alias("pa_uid"),
-        F.when(F.col("ka") <= F.col("kb"), F.col("ub")).otherwise(F.col("ua")).alias("pb_uid"),
+        F.least("pk_a", "pk_b").alias("a"),
+        F.greatest("pk_a", "pk_b").alias("b"),
+        F.when(in_order, F.col("a")).otherwise(F.col("b")).alias("pa_uid"),
+        F.when(in_order, F.col("b")).otherwise(F.col("a")).alias("pb_uid"),
         F.col("r.intersects").alias("inter"),
-        F.when(F.col("ka") <= F.col("kb"), F.col("r.a_contains_b"))
-         .otherwise(F.col("r.b_contains_a")).alias("cab"),
-        F.when(F.col("ka") <= F.col("kb"), F.col("r.b_contains_a"))
-         .otherwise(F.col("r.a_contains_b")).alias("cba"),
+        F.when(in_order, F.col("r.a_contains_b")).otherwise(F.col("r.b_contains_a")).alias("cab"),
+        F.when(in_order, F.col("r.b_contains_a")).otherwise(F.col("r.a_contains_b")).alias("cba"),
     )
     agg = flagged.groupBy("a", "b").agg(
         F.max("inter").alias("intersects"),
@@ -896,46 +825,47 @@ def polygon_pair_join_multi(
 
 # ---------------------------------------------------------------- line joins
 
+def _envelope_parts(df: DataFrame, key_col: str, wkb_col: str, vertices) -> DataFrame:
+    """(key, wkb) table -> (key, wkb, xmin, ymin, xmax, ymax): one row per
+    geometry, the envelope taken over ``vertices(wkb) -> (x, y)``; a
+    geometry without vertices drops out."""
+    def norm(batches):
+        for pdf in batches:
+            rows = []
+            for k, b in zip(pdf[key_col].tolist(), pdf[wkb_col].tolist()):
+                x, y = vertices(bytes(b))
+                if len(x):
+                    rows.append((int(k), bytes(b), float(np.min(x)), float(np.min(y)),
+                                 float(np.max(x)), float(np.max(y))))
+            if rows:
+                yield pd.DataFrame(rows, columns=["key", "wkb", "xmin", "ymin", "xmax", "ymax"])
+
+    return df.select(F.col(key_col), F.col(wkb_col)).mapInPandas(
+        norm, schema="key long, wkb binary, xmin double, ymin double, xmax double, ymax double"
+    )
+
+
 def line_parts_df(lines_df: DataFrame, key_col: str = "key", wkb_col: str = "wkb") -> DataFrame:
     """(key, wkb) LineString table -> (key, wkb, xmin, ymin, xmax, ymax).
 
     The line analog of polygon_parts_df.  No anti-meridian SPLIT for lines
     (out of the general-position model; callers with wrapping tracks split
     upstream, as the GPX store does per segment)."""
-    from ..functions import geometry as geo
+    def vertices(buf):
+        typ, xy = _geo.wkb_parse(buf)
+        if typ != "linestring":
+            raise ValueError(f"line_parts_df expects LineStrings, got {typ}")
+        return xy
 
-    def norm(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keys, wkbs, x0, y0, x1, y1 = [], [], [], [], [], []
-            for k, b in zip(pdf[key_col].tolist(), pdf[wkb_col].tolist()):
-                typ, (vx, vy) = geo.wkb_parse(bytes(b))
-                if typ != "linestring":
-                    raise ValueError(f"line_parts_df expects LineStrings, got {typ}")
-                keys.append(int(k))
-                wkbs.append(bytes(b))
-                x0.append(float(np.min(vx)))
-                y0.append(float(np.min(vy)))
-                x1.append(float(np.max(vx)))
-                y1.append(float(np.max(vy)))
-            yield pd.DataFrame({
-                "key": np.array(keys, dtype=np.int64), "wkb": wkbs,
-                "xmin": x0, "ymin": y0, "xmax": x1, "ymax": y1,
-            })
-
-    return lines_df.select(F.col(key_col), F.col(wkb_col)).mapInPandas(
-        norm, schema="key long, wkb binary, xmin double, ymin double, xmax double, ymax double"
-    )
+    return _envelope_parts(lines_df, key_col, wkb_col, vertices)
 
 
 def _line_poly_candidates(
     lines_df: DataFrame, polygons_df: DataFrame, res: int | None
 ) -> DataFrame:
     """Shared candidate stage for mixed-dimension joins: covering-cell
-    bucket candidates for BOTH distributed sides, codegen envelope prune,
-    spread across executor cores (per-row-CPU refines must not inherit an
-    AQE-coalesced single partition).  Columns: lkey, pkey, wkb_l, wkb_p.
+    bucket candidates for BOTH distributed sides through _pair_candidates.
+    Columns: a (line key), b (polygon key), wkb_a, wkb_b.
 
     Lifecycle: lparts/pparts are persisted because each feeds both its
     covering-cell branch and the WKB re-attach join (a consumed-twice plan
@@ -946,29 +876,8 @@ def _line_poly_candidates(
     pparts = polygon_parts_df(polygons_df).persist()
     if res is None:
         res = _choose_res_dist(pparts)
-    lcov = polygon_cells_df(lparts, res, classify=False).select(
-        "cell", F.col("pkey").alias("lkey"))
-    pcov = polygon_cells_df(pparts, res, classify=False).select("cell", "pkey")
-    pairs = lcov.join(pcov, "cell").select("lkey", "pkey").distinct()
-    la = lparts.select(
-        F.col("key").alias("lkey"), F.col("wkb").alias("wkb_l"),
-        F.col("xmin").alias("lxmin"), F.col("ymin").alias("lymin"),
-        F.col("xmax").alias("lxmax"), F.col("ymax").alias("lymax"),
-    )
-    pb = pparts.select(
-        F.col("key").alias("pkey"), F.col("wkb").alias("wkb_p"),
-        F.col("xmin").alias("pxmin"), F.col("ymin").alias("pymin"),
-        F.col("xmax").alias("pxmax"), F.col("ymax").alias("pymax"),
-    )
-    cand = (
-        pairs.join(la, "lkey").join(pb, "pkey")
-        .filter(
-            (F.col("lxmin") <= F.col("pxmax")) & (F.col("pxmin") <= F.col("lxmax"))
-            & (F.col("lymin") <= F.col("pymax")) & (F.col("pymin") <= F.col("lymax"))
-        )
-        .select("lkey", "pkey", "wkb_l", "wkb_p")
-    )
-    return cand.repartition(cand.sparkSession.sparkContext.defaultParallelism)
+    pairs = _cover_pairs(_cover_keys(lparts, res), _cover_keys(pparts, res))
+    return _pair_candidates(pairs, lparts, pparts)
 
 
 def line_polygon_join(
@@ -989,8 +898,6 @@ def line_polygon_join(
 
     cand = _line_poly_candidates(lines_df, polygons_df, res)
 
-    from pyspark.sql import types as T
-
     @F.pandas_udf(
         T.StructType([
             T.StructField("intersects", T.BooleanType()),
@@ -1006,11 +913,11 @@ def line_polygon_join(
             {"intersects": inter, "within": within, "crosses": crosses}
         )
 
-    out = cand.withColumn("r", rel.asNondeterministic()(F.col("wkb_l"), F.col("wkb_p")))
+    out = cand.withColumn("r", rel.asNondeterministic()(F.col("wkb_a"), F.col("wkb_b")))
     return (
         out.filter(F.col("r.intersects"))
         .select(
-            "lkey", "pkey",
+            F.col("a").alias("lkey"), F.col("b").alias("pkey"),
             F.col("r.within").alias("within"),
             F.col("r.crosses").alias("crosses"),
         )
@@ -1028,8 +935,6 @@ def line_clip_join(
     pair with a non-empty clip — (lkey, pkey, qclip) where qclip is the
     int64 quantized clipped length (per-interval floor at 1e7, sum —
     aggregation-order-independent, hence oracle-exact)."""
-    from pyspark.sql import types as T
-
     from ..functions.overlay import clip_qlen_batch
 
     cand = _line_poly_candidates(lines_df, polygons_df, res)
@@ -1040,8 +945,10 @@ def line_clip_join(
         # clip_line_polygon's qlen), not a per-pair Python loop
         return pd.Series(clip_qlen_batch(l_s, p_s))
 
-    out = cand.withColumn("qclip", qclip.asNondeterministic()(F.col("wkb_l"), F.col("wkb_p")))
-    return out.filter(F.col("qclip") > 0).select("lkey", "pkey", "qclip")
+    out = cand.withColumn("qclip", qclip.asNondeterministic()(F.col("wkb_a"), F.col("wkb_b")))
+    return out.filter(F.col("qclip") > 0).select(
+        F.col("a").alias("lkey"), F.col("b").alias("pkey"), "qclip"
+    )
 
 
 def nearest_line_join(
@@ -1068,7 +975,6 @@ def nearest_line_join(
 
     Output (id, key, qdist) with qdist = floor(1e7 · distance); points with
     no line inside the radius drop out (inner-join semantics)."""
-    from ..functions import geometry as geo
 
     rows = sorted(
         ((int(r[key_col]), bytes(r[wkb_col])) for r in lines_df.collect()),
@@ -1081,7 +987,7 @@ def nearest_line_join(
     keys: list[int] = []
     offsets: list[int] = []
     for k, wkb in rows:
-        _typ, (lx, ly) = geo.wkb_parse(wkb)
+        _typ, (lx, ly) = _geo.wkb_parse(wkb)
         if len(lx) < 2:
             continue
         keys.append(k)
@@ -1104,7 +1010,7 @@ def nearest_line_join(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            d2 = geo.point_segments_dist2(
+            d2 = _geo.point_segments_dist2(
                 pdf[lon_col].to_numpy(), pdf[lat_col].to_numpy(), *sa)
             per_line = np.minimum.reduceat(d2, offs, axis=1)
             qd = np.floor(np.sqrt(per_line) * 1e7).astype(np.int64)
@@ -1127,34 +1033,14 @@ def geometry_parts_df(gdf: DataFrame, key_col: str = "key",
     The fully-generic analog of polygon_parts_df/line_parts_df (no SPLIT or
     member expansion — distance semantics need the whole geometry): envelope
     from the decomposed vertex set, any of the 7 geometry types."""
-    from ..functions import geometry as geo
     from ..functions.sqlmm import geom_decompose
 
-    def norm(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keys, wkbs, x0, y0, x1, y1 = [], [], [], [], [], []
-            for k, b in zip(pdf[key_col].tolist(), pdf[wkb_col].tolist()):
-                D = geom_decompose(*geo.wkb_parse(bytes(b)))
-                ax = np.concatenate([D["px"], D["svx"], D["swx"]])
-                ay = np.concatenate([D["py"], D["svy"], D["swy"]])
-                if len(ax) == 0:
-                    continue
-                keys.append(int(k))
-                wkbs.append(bytes(b))
-                x0.append(float(ax.min()))
-                y0.append(float(ay.min()))
-                x1.append(float(ax.max()))
-                y1.append(float(ay.max()))
-            yield pd.DataFrame({
-                "key": np.array(keys, dtype=np.int64), "wkb": wkbs,
-                "xmin": x0, "ymin": y0, "xmax": x1, "ymax": y1,
-            })
+    def vertices(buf):
+        D = geom_decompose(*_geo.wkb_parse(buf))
+        return (np.concatenate([D["px"], D["svx"], D["swx"]]),
+                np.concatenate([D["py"], D["svy"], D["swy"]]))
 
-    return gdf.select(F.col(key_col), F.col(wkb_col)).mapInPandas(
-        norm, schema="key long, wkb binary, xmin double, ymin double, xmax double, ymax double"
-    )
+    return _envelope_parts(gdf, key_col, wkb_col, vertices)
 
 
 def _radius_res(parts: DataFrame, radius: float) -> int:
@@ -1162,10 +1048,7 @@ def _radius_res(parts: DataFrame, radius: float) -> int:
     heuristic, capped so one cell is never (much) smaller than the radius —
     otherwise the radius-expanded covers grow as (r/cell)^2 per feature."""
     res = _choose_res_dist(parts)
-    if radius > 0:
-        cap = int(math.floor(math.log2(360.0 / radius)))
-        res = min(res, max(1, cap))
-    return res
+    return min(res, _res_for_width(radius)) if radius > 0 else res
 
 
 def geometry_distance_join(
@@ -1189,7 +1072,6 @@ def geometry_distance_join(
 
     Output: (akey, bkey, qdist) with qdist = floor(1e7 * distance), for
     pairs with qdist <= floor(1e7 * radius)."""
-    from ..functions import geometry as geo
     from ..functions.sqlmm import geom_distance_batch
 
     r = float(radius)
@@ -1203,35 +1085,8 @@ def geometry_distance_join(
     bparts = geometry_parts_df(b_df).localCheckpoint()
     if res is None:
         res = _radius_res(bparts, r)
-    aexp = aparts.select(
-        "key", "wkb",
-        (F.col("xmin") - rp).alias("xmin"), (F.col("ymin") - rp).alias("ymin"),
-        (F.col("xmax") + rp).alias("xmax"), (F.col("ymax") + rp).alias("ymax"),
-    )
-    acov = polygon_cells_df(aexp, res, classify=False).select(
-        "cell", F.col("pkey").alias("akey"))
-    bcov = polygon_cells_df(bparts, res, classify=False).select(
-        "cell", F.col("pkey").alias("bkey"))
-    pairs = acov.join(bcov, "cell").select("akey", "bkey").distinct()
-    aa = aparts.select(
-        F.col("key").alias("akey"), F.col("wkb").alias("wkb_a"),
-        F.col("xmin").alias("axmin"), F.col("ymin").alias("aymin"),
-        F.col("xmax").alias("axmax"), F.col("ymax").alias("aymax"),
-    )
-    bb = bparts.select(
-        F.col("key").alias("bkey"), F.col("wkb").alias("wkb_b"),
-        F.col("xmin").alias("bxmin"), F.col("ymin").alias("bymin"),
-        F.col("xmax").alias("bxmax"), F.col("ymax").alias("bymax"),
-    )
-    cand = (
-        pairs.join(aa, "akey").join(bb, "bkey")
-        .filter(
-            (F.col("axmin") - rp <= F.col("bxmax")) & (F.col("bxmin") <= F.col("axmax") + rp)
-            & (F.col("aymin") - rp <= F.col("bymax")) & (F.col("bymin") <= F.col("aymax") + rp)
-        )
-        .select("akey", "bkey", "wkb_a", "wkb_b")
-    )
-    cand = cand.repartition(cand.sparkSession.sparkContext.defaultParallelism)
+    pairs = _cover_pairs(_cover_keys(aparts, res, rp), _cover_keys(bparts, res))
+    cand = _pair_candidates(pairs, aparts, bparts, rp)
     rq = int(np.floor(r * 1e7))
 
     @F.pandas_udf("long")
@@ -1243,7 +1098,9 @@ def geometry_distance_join(
 
     out = cand.withColumn(
         "qdist", qdist.asNondeterministic()(F.col("wkb_a"), F.col("wkb_b")))
-    return out.filter(F.col("qdist") <= F.lit(rq)).select("akey", "bkey", "qdist")
+    return out.filter(F.col("qdist") <= F.lit(rq)).select(
+        F.col("a").alias("akey"), F.col("b").alias("bkey"), "qdist"
+    )
 
 
 def nearest_line_join_dist(
@@ -1268,7 +1125,6 @@ def nearest_line_join_dist(
 
     Use this when the line table is continental-scale; the broadcast
     variant stays the low-latency path for road-network-sized dims."""
-    from ..functions import geometry as geo
 
     r = float(radius)
     rp = r + 1e-6  # quantization-granularity pad (see geometry_distance_join)
@@ -1276,19 +1132,12 @@ def nearest_line_join_dist(
     lparts = line_parts_df(lines_df, key_col, wkb_col).localCheckpoint()
     if res is None:
         res = _radius_res(lparts, r)
-    lexp = lparts.select(
-        "key", "wkb",
-        (F.col("xmin") - rp).alias("xmin"), (F.col("ymin") - rp).alias("ymin"),
-        (F.col("xmax") + rp).alias("xmax"), (F.col("ymax") + rp).alias("ymax"),
-    )
-    lcov = polygon_cells_df(lexp, res, classify=False).select(
-        "cell", F.col("pkey").alias("lkey"))
-
-    from ..functions.spark_exprs import cell_col
-
+    lcov = _cover_keys(lparts, res, rp).withColumnRenamed("key", "lkey")
     pts = points_df.select(
         F.col(id_col).alias("id"), F.col(lon_col).alias("px"), F.col(lat_col).alias("py"),
     ).withColumn("cell", cell_col(F.col("px"), F.col("py"), res))
+    line_env = tuple(F.col(c) for c in ("xmin", "ymin", "xmax", "ymax"))
+    point = (F.col("px"), F.col("py"), F.col("px"), F.col("py"))
     cand = (
         pts.join(lcov, "cell")
         .join(
@@ -1297,10 +1146,7 @@ def nearest_line_join_dist(
                 "xmin", "ymin", "xmax", "ymax"),
             "lkey",
         )
-        .filter(
-            (F.col("px") >= F.col("xmin") - rp) & (F.col("px") <= F.col("xmax") + rp)
-            & (F.col("py") >= F.col("ymin") - rp) & (F.col("py") <= F.col("ymax") + rp)
-        )
+        .filter(_boxes_meet(line_env, point, rp))
         .select("id", "px", "py", "lkey", "lwkb")
     )
     cand = cand.repartition(cand.sparkSession.sparkContext.defaultParallelism)
@@ -1313,10 +1159,10 @@ def nearest_line_join_dist(
             ids, keys, qds = [], [], []
             for lkey, grp in pdf.groupby("lkey", sort=False):
                 wkb = bytes(grp["lwkb"].iloc[0])
-                _typ, (lx, ly) = geo.wkb_parse(wkb)
+                _typ, (lx, ly) = _geo.wkb_parse(wkb)
                 if len(lx) < 2:
                     continue
-                d2 = geo.point_segments_dist2(
+                d2 = _geo.point_segments_dist2(
                     grp["px"].to_numpy(), grp["py"].to_numpy(),
                     lx[:-1], ly[:-1], lx[1:], ly[1:])
                 qd = np.floor(np.sqrt(d2.min(axis=1)) * 1e7).astype(np.int64)
@@ -1357,8 +1203,6 @@ def spacetime_join(
     integer distance + time predicates after; each pair emitted once
     (b's cell is unique).  Compose with time bucketing (range_join's
     bins) when a cell's population is time-dominated."""
-    from pyspark.sql import functions as F
-
     from .density import grid_expr
 
     def with_cell(df, prefix):

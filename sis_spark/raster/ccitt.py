@@ -107,6 +107,8 @@ def encode_mh(arr: np.ndarray) -> bytes:
     if arr.ndim == 3:
         arr = arr[:, :, 0]
     a = (arr != 0).astype(np.int8)
+    if a.shape[1] == 0:  # a zero-width row has no runs: it encodes to no bits
+        return b""
     out = bytearray()
     for row in a:
         bits = []

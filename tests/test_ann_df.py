@@ -28,7 +28,8 @@ def test_ivf_df_matches_list_api(spark):
     qids = [3, 77, 120]
     want = sorted(tuple(r) for r in ivf_topk(df, qids, 5, nlist=8, nprobe=3).collect())
     queries = df.filter(F.col("vec_id").isin(qids))
-    got = sorted(tuple(r) for r in ivf_topk_df(df, queries, 5, nlist=8, nprobe=3).collect())
+    got = sorted(tuple(r) for r in ivf_topk_df(
+        df, queries, 5, nlist=8, nprobe=3, exclude_self=True).collect())
     assert got == want
 
 
@@ -62,7 +63,8 @@ def test_pq_df_matches_list_api(spark):
     qids = [0, 55]
     want = sorted(tuple(r) for r in pq_topk(df, qids, 4, m=4, ksub=8).collect())
     queries = df.filter(F.col("vec_id").isin(qids))
-    got = sorted(tuple(r) for r in pq_topk_df(df, queries, 4, m=4, ksub=8).collect())
+    got = sorted(tuple(r) for r in pq_topk_df(
+        df, queries, 4, m=4, ksub=8, exclude_self=True).collect())
     assert got == want
 
 
@@ -75,8 +77,26 @@ def test_ivf_pq_df_matches_list_api(spark):
         df, qids, 4, nlist=6, nprobe=2, m=4, ksub=8).collect())
     queries = df.filter(F.col("vec_id").isin(qids))
     got = sorted(tuple(r) for r in ivf_pq_topk_df(
-        df, queries, 4, nlist=6, nprobe=2, m=4, ksub=8).collect())
+        df, queries, 4, nlist=6, nprobe=2, m=4, ksub=8, exclude_self=True).collect())
     assert got == want
+
+
+def test_df_external_query_colliding_id_keeps_candidate(spark):
+    """An external query whose id collides with a collection id is not the
+    collection vector: by default no ANN search drops that candidate.  The
+    query equals collection vector 0 under id 0, so with a full probe 0 is
+    its nearest neighbour (ties go to the lowest id) and must rank first."""
+    from sis_spark.operators.ann import ivf_pq_topk_df
+
+    df = _emb(spark, 40, 8, seed=12)
+    vec = df.filter(F.col("vec_id") == 0).first()["embedding"]
+    queries = spark.createDataFrame([(0, vec)], "vec_id long, embedding array<double>")
+    for out in (
+        ivf_topk_df(df, queries, 2, nlist=2, nprobe=2),
+        pq_topk_df(df, queries, 2, m=2, ksub=4),
+        ivf_pq_topk_df(df, queries, 2, nlist=2, nprobe=2, m=2, ksub=4),
+    ):
+        assert out.orderBy("rank").first()["cand_id"] == 0
 
 
 def test_ivf_df_handles_1e5_query_table(spark):

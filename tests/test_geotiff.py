@@ -275,6 +275,16 @@ def test_ccitt_extremes_and_wide_runs():
     assert np.array_equal(decode_mh(encode_mh(img), 4, 97), img)
 
 
+def test_ccitt_zero_width_rows_round_trip():
+    import numpy as np
+
+    from sis_spark.raster.ccitt import decode_mh, encode_mh
+
+    for rows in (0, 1, 5):
+        img = np.zeros((rows, 0), np.uint8)
+        assert np.array_equal(decode_mh(encode_mh(img), rows, 0), img)
+
+
 def test_ccitt_codewords_are_t4():
     """Spot-check canonical ITU T.4 codewords (TIFF 6.0 section 10)."""
     from sis_spark.raster.ccitt import _ENC

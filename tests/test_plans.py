@@ -34,7 +34,15 @@ def test_spatial_join_prefilter_is_broadcast(spark, sf_dir):
     from sis_spark.queries import _events_points, _supplier_polygons
 
     pts = _events_points(spark, sf_dir)
-    out = spatial_join(pts, _supplier_polygons(spark, sf_dir), "lon", "lat")
+    polys = _supplier_polygons(spark, sf_dir)
+    # building the join is pure planning: the call itself runs no Spark job
+    sc = spark.sparkContext
+    sc.setJobGroup("spatial_join_plan", "spatial_join() call")
+    try:
+        out = spatial_join(pts, polys, "lon", "lat")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("spatial_join_plan") == []
     plan = _plan(out)
     # both the cell-prefilter join and the key-map join must be broadcast:
     # the skewed point side must never shuffle on cell
